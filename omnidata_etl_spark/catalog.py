@@ -12,10 +12,11 @@ import glob
 import hashlib
 import math
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
-from omnidata_etl_spark.session import default_parallelism, ensure_tuned
+from omnidata_etl_spark.session import default_parallelism, ensure_tuned, state
 
 TABLES = (
     "region",
@@ -63,7 +64,7 @@ _MIN_GROUP_ROWS = 8_192  # don't shred into groups too small to scan well
 #      DIRECTORY of single-group part files.
 #   2. The directory mirror was implemented (commit a1d5948) and A/B'd
 #      same-session, mirror vs OMNIDATA_NO_MIRROR, noop sink, min of 4
-#      (scripts/ab_mirror_r12.py): it LOSES on most consumers —
+#      (OPTIMIZATION_r12.md item 1): it LOSES on most consumers —
 #      binary_stats −63 ms, curriculum −62, similarity_cosine −34,
 #      ann_pq −34, udtf_chunk −20, decontaminate −15, decode_stats −14,
 #      vs wins of +38 (audio_stats) and +20 (scene_cut) only. 32 micro-file
@@ -74,32 +75,28 @@ _MIN_GROUP_ROWS = 8_192  # don't shred into groups too small to scan well
 # thousands of files, the scan is already wide, and spread() no-ops.
 
 
-def _splittable_path(sf_dir: str, name: str) -> tuple[str, int]:
-    """Path to scan for a catalog table + its split-count estimate.
+def _splittable_path(sf_dir: str, name: str) -> str:
+    """Path to scan for a catalog table.
 
     Returns the original path untouched for directory-style (already
     multi-file) tables, small tables, and already-chunked files; otherwise
-    the lazily-built multi-row-group mirror.
+    the lazily-built multi-row-group mirror, whose file name ends in its
+    row-group count (see scan_splits).
     """
     src = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(src):
-        try:
-            return src, sum(1 for f in os.listdir(src) if f.endswith(".parquet"))
-        except OSError:
-            return src, 1
-    if os.environ.get("OMNIDATA_NO_MIRROR"):
-        return src, 1
+    if os.path.isdir(src) or os.environ.get("OMNIDATA_NO_MIRROR"):
+        return src
     try:
         import pyarrow.parquet as pq
 
         meta = pq.ParquetFile(src).metadata
         rows, groups = meta.num_rows, meta.num_row_groups
     except Exception:
-        return src, 1
+        return src
     cores = default_parallelism()
     target = min(cores, max(1, rows // _MIN_GROUP_ROWS))
     if rows < _MIN_MIRROR_ROWS or groups >= max(2, target // 2):
-        return src, groups
+        return src
     st = os.stat(src)
     key = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:12]
     mdir = os.path.join(_MIRROR_ROOT, key)
@@ -133,8 +130,24 @@ def _splittable_path(sf_dir: str, name: str) -> tuple[str, int]:
                     except OSError:
                         pass
         except Exception:  # pragma: no cover - mirror is an optimization only
-            return src, groups
-    return dst, target
+            return src
+    return dst
+
+
+def scan_splits(files: list[str]) -> int:
+    """Scan tasks a list of input files yields, from names alone: one per
+    file, except that a catalog mirror counts as the row-group target
+    _splittable_path wrote into its name (``<table>-<mtime>-<size>-
+    <target>.parquet``)."""
+    root = os.path.realpath(_MIRROR_ROOT)
+    n = 0
+    for f in files:
+        path = urlparse(f).path
+        if os.path.realpath(os.path.dirname(os.path.dirname(path))) == root:
+            n += int(path.rsplit("-", 1)[1].removesuffix(".parquet"))
+        else:
+            n += 1
+    return n
 
 
 def _size_shuffle_partitions(spark: SparkSession, sf_dir: str) -> None:
@@ -164,17 +177,16 @@ def _size_shuffle_partitions(spark: SparkSession, sf_dir: str) -> None:
     (session, sf_dir): a deliberate later override by the user would be
     clobbered on the next table() call otherwise.
     """
-    key = getattr(spark, "_omnidata_sized_for", None)
-    if key == sf_dir:
+    st = state(spark)
+    if st.sized_for == sf_dir:
         return
-    spark._omnidata_sized_for = sf_dir
+    st.sized_for = sf_dir
     try:
         # Respect an explicit external setting (ADVICE r2): only replace the
         # stock default (200), ensure_tuned's core-count floor, or a value
         # this sizer itself wrote earlier for another sf_dir.
         cur = spark.conf.get("spark.sql.shuffle.partitions", "200")
-        ours = getattr(spark, "_omnidata_sized_value", None)
-        if cur not in {"200", str(default_parallelism()), ours}:
+        if cur not in {"200", str(default_parallelism()), st.sized_partitions}:
             return
     except Exception:  # pragma: no cover
         pass
@@ -191,19 +203,18 @@ def _size_shuffle_partitions(spark: SparkSession, sf_dir: str) -> None:
         est = total * 3  # uncompressed estimate, mirrors fileCompressionFactor
         n = max(default_parallelism(), min(2000, est // (64 << 20)))
         spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        spark._omnidata_sized_value = str(n)
+        st.sized_partitions = str(n)
         advisory = max(1 << 20, min(64 << 20, est // (4 * default_parallelism())))
         cur_adv = spark.conf.get(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes", "67108864"
         )
-        ours_adv = getattr(spark, "_omnidata_sized_advisory", None)
         # same override discipline: only replace the stock default (64m,
         # also what ensure_tuned writes) or our own earlier sizing
-        if cur_adv in {"64m", "67108864", str(64 << 20), ours_adv}:
+        if cur_adv in {"64m", "67108864", str(64 << 20), st.sized_advisory}:
             spark.conf.set(
                 "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(advisory)
             )
-            spark._omnidata_sized_advisory = str(advisory)
+            st.sized_advisory = str(advisory)
     except Exception:  # pragma: no cover - stats are an optimization only
         pass
 
@@ -223,22 +234,14 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     ensure_tuned(spark)
     _size_shuffle_partitions(spark, sf_dir)
-    # DataFrame *handles* (logical plans, not data) cached on the session
-    # object itself, so the cache's lifetime IS the session's. (A
-    # module-global WeakKeyDictionary cannot work here: each cached
-    # DataFrame strongly references its session via df._session, pinning
-    # the weak key forever; and an id()-keyed dict could alias a recycled
-    # address to a dead session's plans.)
-    per_session = getattr(spark, "_omnidata_handle_cache", None)
-    if per_session is None:
-        per_session = {}
-        spark._omnidata_handle_cache = per_session
+    # DataFrame *handles* (logical plans, not data) live in the session
+    # state, so the cache's lifetime IS the session's.
+    handles = state(spark).tables
     key = (sf_dir, name)
-    cached = per_session.get(key)
+    cached = handles.get(key)
     if cached is not None:
         return cached
-    path, n_splits = _splittable_path(sf_dir, name)
-    df = spark.read.parquet(path)
+    df = spark.read.parquet(_splittable_path(sf_dir, name))
     if name == "events":
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
@@ -247,11 +250,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    # Scan-width hint for queries.spread(): a metadata-derived split count so
-    # fan-out decisions never materialize an RDD lineage (r2 ADVICE: the
-    # df.rdd.getNumPartitions() probe cost a full analysis per query build).
-    df._omnidata_splits = n_splits
-    per_session[key] = df
+    handles[key] = df
     return df
 
 

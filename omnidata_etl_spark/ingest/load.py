@@ -83,8 +83,17 @@ def add_surrogate_key(
     (for consumers whose row space legitimately exceeds 2.1B, e.g.
     etl_global_shuffle positions at corpus scale).
     """
+    return _keyed(df, order_by, as_long)[0]
+
+
+def _keyed(
+    df: DataFrame, order_by: list[str] | None, as_long: bool
+) -> tuple[DataFrame, DataFrame | None]:
+    """(add_surrogate_key's result, its scratch frame): the persisted ranged
+    frame both id branches read, returned so load() can unpersist it once
+    its write has run. The scratch is None when ``df`` already has an id."""
     if has_id_column(df):
-        return df
+        return df, None
     order_cols = order_by or df.columns
     ocols = [F.col(c) for c in order_cols]
     from omnidata_etl_spark.session import default_parallelism
@@ -153,8 +162,7 @@ def add_surrogate_key(
         .withColumn("id", id_expr)
         .drop("_sk_pid", "_sk_rn", "_sk_off")
     )
-    out._sk_cache = numbered  # handle for load()'s post-write unpersist
-    return out
+    return out, numbered
 
 
 def apply_types(df: DataFrame, types: dict[str, str] | None) -> DataFrame:
@@ -197,16 +205,16 @@ def load(
     out = df.select(*columns) if columns else df
     out = normalize_empty_to_null(out)
     out = apply_types(out, types)
+    scratch = None
     if surrogate_key:
-        out = add_surrogate_key(out, order_by)
+        out, scratch = _keyed(out, order_by, False)
 
     staging = os.path.join(warehouse, f".{name}.staging-{uuid.uuid4().hex}")
     try:
         out.write.mode("overwrite").parquet(staging)  # executes the plan
     finally:
-        cache = getattr(out, "_sk_cache", None)
-        if cache is not None:  # surrogate-key scratch frame: one-shot here
-            cache.unpersist()
+        if scratch is not None:  # surrogate-key scratch frame: one-shot here
+            scratch.unpersist()
     if os.path.exists(target):
         if mode == "error":  # re-check: lost race
             shutil.rmtree(staging, ignore_errors=True)

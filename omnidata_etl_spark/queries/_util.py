@@ -18,10 +18,12 @@ throughout:
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from omnidata_etl_spark.session import default_parallelism
+from omnidata_etl_spark.catalog import scan_splits
+from omnidata_etl_spark.session import default_parallelism, state
 
 DEC = "decimal(18,2)"
 
@@ -81,19 +83,18 @@ def spread(df: DataFrame) -> DataFrame:
     coalesces shuffle outputs, never splits a too-coarse scan, and a
     single-row-group file is unsplittable by maxPartitionBytes.
 
-    The width probe is metadata-only: catalog.table() stamps the frame with
-    the parquet split-count estimate (`_omnidata_splits`); the fallback is
-    `inputFiles()` (file listing, no job). Never `df.rdd.getNumPartitions()`
-    — that materializes an RDD lineage through py4j on every query build
-    (r2 ADVICE: a measurable slice of the per-query overhead floor).
+    The width probe is metadata-only: ``inputFiles()`` (the plan's file
+    listing, no job), counted by catalog.scan_splits, which reads a catalog
+    mirror's row-group count from its file name. Never
+    `df.rdd.getNumPartitions()` — that materializes an RDD lineage through
+    py4j on every query build (r2 ADVICE: a measurable slice of the
+    per-query overhead floor).
     """
     target = default_parallelism()
-    splits = getattr(df, "_omnidata_splits", None)
-    if splits is None:
-        try:
-            splits = len(df.inputFiles())
-        except Exception:
-            splits = 1
+    try:
+        splits = scan_splits(df.inputFiles())
+    except Exception:
+        splits = 1
     if splits >= target:
         return df
     return df.repartition(target)
@@ -181,81 +182,45 @@ def davg(expr: Column, count: Column | None = None) -> Column:
     return F.sum(expr.cast(DEC)).cast("double") / n
 
 
-def session_df_memo(spark, key: tuple, build) -> DataFrame:
-    """Session-scoped persisted-DataFrame memo (r10, r9 ADVICE #3).
+def pin(spark, key: tuple, build) -> DataFrame:
+    """The engine's one way to share an intermediate within a session.
 
-    Repeated query BUILDS in one long-lived session previously persisted a
-    FRESH O(corpus) frame per build and never unpersisted it — each call
-    creates a new plan, so the cache manager accumulates entries. The memo
-    returns one shared frame per logical key; keys embed the source parquet
-    fingerprint (similarity._parquet_fingerprint), so a regenerated table
-    unpersists and evicts the superseded entry instead of pinning stale
-    data (the _corpus_count discipline). key = (kind, sf_dir, fingerprint,
-    ...); pruning matches on (kind, sf_dir). A persisted frame INSIDE a
-    memoized plan (e.g. a shingle-set feeding a pair frame) is not
-    individually tracked: on fingerprint invalidation only the top frame is
-    unpersisted and the inner one ages out with the session — a one-off,
-    regeneration-only leak accepted for the build()-closure simplicity."""
-    cache = getattr(spark, "_omnidata_df_memo", None)
-    if cache is None:
-        cache = {}
-        spark._omnidata_df_memo = cache
-    df = cache.get(key)
-    if df is None:
-        for k in [k for k in cache if k[:2] == key[:2]]:
-            try:
-                cache[k].unpersist()
-            except Exception:
-                pass
-            del cache[k]
-        df = build()
-        cache[key] = df
+    Materializes ``build()`` once per (session, key), at the first build,
+    and hands every later build the same frame, so repeat builds fire no
+    Spark job. ``key = (kind, sf_dir, fingerprint, ...)``: the fingerprint
+    (similarity._parquet_fingerprint) changes when a source table is
+    regenerated, and the pin of the same (kind, sf_dir) it supersedes is
+    released, its blocks freed.
+
+    On a local master the frame is ``localCheckpoint(eager=True)``ed: the
+    blocks live outside the SQL cache manager, so a long-lived session's
+    ``clearCache()`` cannot evict them (r10: persist-backed memos re-ran
+    their full build after every bench clearCache). Those blocks are
+    unreplicated and truncate lineage, so on executor loss there is no
+    recompute path; that is only sound where block loss means the whole
+    app died. Any other master gets ``persist(MEMORY_AND_DISK)`` plus a
+    count: lineage-backed, and re-persisted here if clearCache() evicted it.
+
+    A frame ``build()`` persists internally is the build's own business: it
+    is not tracked, and an identical plan's persist is a cache hit."""
+    pins = state(spark).pins
+    hit = pins.get(key)
+    if hit is not None:
+        df, local = hit
+        if not local and df.storageLevel == StorageLevel.NONE:
+            df.persist(StorageLevel.MEMORY_AND_DISK).count()
+        return df
+    for old in [k for k in pins if k[:2] == key[:2]]:
+        df, local = pins.pop(old)
+        if local:  # DataFrame.unpersist() leaves checkpoint blocks alone
+            df._jdf.queryExecution().logical().rdd().unpersist(True)
+        else:
+            df.unpersist()
+    local = spark.sparkContext.master.startswith("local")
+    if local:
+        df = build().localCheckpoint(eager=True)
     else:
-        # A long-lived session may clearCache() between workload passes
-        # (bench.py housekeeping does): the memo then handed back an
-        # EVICTED frame and every consumer silently recomputed the full
-        # build plan per action (caught r10: the audio-fingerprint memo
-        # benched at 2.06 s vs 1.10 s measured — 4 summary subtrees each
-        # re-ran the FFT pass). Eviction shows as a storageLevel with
-        # neither memory nor disk; re-pin and rematerialize once.
-        lvl = df.storageLevel
-        if getattr(df, "_omnidata_checkpointed", False):
-            pass  # localCheckpoint blocks live outside the SQL cache —
-            # clearCache can't evict them and storageLevel is not
-            # meaningful for the check below
-        elif not (lvl.useMemory or lvl.useDisk):
-            df.persist()
-            df.count()
+        df = build().persist(StorageLevel.MEMORY_AND_DISK)
+        df.count()
+    pins[key] = (df, local)
     return df
-
-
-def memo_pin(df: DataFrame) -> DataFrame:
-    """Pin a memo build's result OUTSIDE the SQL cache manager.
-
-    ``localCheckpoint(eager=True)`` materializes the frame into block-
-    manager storage that ``spark.catalog.clearCache()`` cannot evict —
-    persist-backed memo frames were silently un-cached by long-lived-
-    session housekeeping (bench.py between-pass clearCache) and every
-    later pass re-ran the full build (r10: audio-fingerprint 2.06 s
-    benched vs 1.10 s measured). The marker tells session_df_memo's
-    eviction re-pin check to skip (storageLevel is not meaningful for
-    checkpointed frames).
-
-    Cluster safety (r10 ADVICE): localCheckpoint blocks are UNREPLICATED
-    and truncate lineage — on executor loss every later consumer action
-    fails, with no recompute path. That trade is only sound where block
-    loss implies the whole app died, i.e. a local[*] master. On any
-    non-local master this falls back to persist(MEMORY_AND_DISK): the
-    frame stays lineage-backed (recomputable on block loss) and
-    session_df_memo's storageLevel re-pin check handles cache eviction."""
-    spark = df.sparkSession
-    master = spark.conf.get("spark.master", "")
-    if not master.startswith("local"):
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()
-        return out
-    out = df.localCheckpoint(eager=True)
-    out._omnidata_checkpointed = True
-    return out

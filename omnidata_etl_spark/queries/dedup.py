@@ -27,9 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from omnidata_etl_spark.catalog import table
-from omnidata_etl_spark.queries._util import memo_pin, session_df_memo
+from omnidata_etl_spark.queries._util import pin
 from omnidata_etl_spark.registry import query
-from omnidata_etl_spark.session import default_parallelism
 
 # MinHash-LSH geometry: 32 hashes = 8 bands × 4 rows ⇒ candidate threshold
 # s where collision prob 1-(1-s^4)^8 ≈ 0.5 at s ≈ 0.56.
@@ -65,7 +64,7 @@ def _shingle_sets(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     is the difference between shuffling/persisting ~1× corpus bytes of longs
     and ~5× corpus bytes of overlapping shingle strings.
     """
-    return _shingle_sets_of(table(spark, sf_dir, "documents"), n)
+    return _shingle_sets_of(table(spark, sf_dir, "documents"), n, fan_out=True)
 
 
 def rolling_shingle_hashes(
@@ -138,12 +137,13 @@ def rolling_shingle_hashes(
     return long_docs.unionByName(short)
 
 
-def _shingle_sets_of(docs: DataFrame, n: int) -> DataFrame:
+def _shingle_sets_of(docs: DataFrame, n: int, fan_out: bool) -> DataFrame:
     """`_shingle_sets` over an arbitrary (doc_id, text) frame: the distinct
     rolling shingle hashes collected to one set-array per document (see
-    rolling_shingle_hashes for the formulation and its scale rationale)."""
+    rolling_shingle_hashes for the formulation, its scale rationale and
+    ``fan_out``)."""
     return (
-        rolling_shingle_hashes(docs, n)
+        rolling_shingle_hashes(docs, n, fan_out=fan_out)
         .groupBy("doc_id")
         .agg(F.collect_set("sh").alias("tokens"))
     )
@@ -305,26 +305,23 @@ def exact_jaccard(pairs: DataFrame, token_sets: DataFrame) -> DataFrame:
 def _main_pairs_n5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified near-dup pairs (n=5 shingles, jaccard ≥ threshold) over the
     MAIN corpus — the shared expensive subplan of dedup_near_minhash,
-    dedup_cluster_canonical and dedup_cluster_sizes. Session-memoized and
-    memo_pin'd (localCheckpoint): plan-identity sharing only helped within
-    one warm cache generation — bench's between-pass clearCache() evicted
-    the persisted frames and every pass re-ran shingling+LSH+verification
-    per query (r10: near_minhash benched 1.27 s with the whole family
-    rebuilding; pinned, the family shares ONE materialization per corpus
-    generation)."""
+    dedup_cluster_canonical and dedup_cluster_sizes, pin()ned:
+    plan-identity sharing only helped within one warm cache generation —
+    bench's between-pass clearCache() evicted the persisted frames and
+    every pass re-ran shingling+LSH+verification per query (r10:
+    near_minhash benched 1.27 s with the whole family rebuilding; pinned,
+    the family shares ONE materialization per corpus generation)."""
     from omnidata_etl_spark.queries.similarity import _parquet_fingerprint
 
     def build() -> DataFrame:
         shingle_sets = _shingle_sets(spark, sf_dir, n=5).persist()
         sigs = minhash_signatures(shingle_sets)
         cands = lsh_candidate_pairs(sigs)
-        return memo_pin(
-            exact_jaccard(cands, shingle_sets).filter(
-                F.col("jaccard") >= JACCARD_THRESHOLD
-            )
+        return exact_jaccard(cands, shingle_sets).filter(
+            F.col("jaccard") >= JACCARD_THRESHOLD
         )
 
-    return session_df_memo(
+    return pin(
         spark,
         ("main_pairs_n5", sf_dir, _parquet_fingerprint(sf_dir, "documents")),
         build,
@@ -379,10 +376,9 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _probe_corpus(spark: SparkSession, sf_dir: str):
     """(originals, originals ∪ perturbed copies, id offset) — the shared
-    40-doc planted-pair probe corpus (copies drop the leading token). The
-    tiny frame is stamped as already-wide so spread() inside shared paths
-    doesn't insert a 32-way repartition whose per-stage task overhead
-    dwarfs the probe's compute."""
+    40-doc planted-pair probe corpus (copies drop the leading token).
+    Shingle it with ``fan_out=False``: a spread() repartition's per-stage
+    task overhead would dwarf the tiny probe's compute."""
     _OFF = 10_000_000_000  # sentinel id offset, far above any real doc_id
     # Pushed-down range predicate, not orderBy().limit(20): the TakeOrdered
     # form heap-sorts the FULL corpus with document text in the heap (the
@@ -401,7 +397,6 @@ def _probe_corpus(spark: SparkSession, sf_dir: str):
             F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
         )
     )
-    probe_corpus._omnidata_splits = default_parallelism()
     return originals, probe_corpus, _OFF
 
 
@@ -422,14 +417,12 @@ def _planted_recall(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     _assert_probe_nonempty(spark, sf_dir)
 
     def build() -> DataFrame:
-        from omnidata_etl_spark.queries._util import memo_pin
-
         originals, probe_corpus, _OFF = _probe_corpus(spark, sf_dir)
-        probe_sets = _shingle_sets_of(probe_corpus, n=n).persist()
+        probe_sets = _shingle_sets_of(probe_corpus, n=n, fan_out=False).persist()
         probe_pairs = exact_jaccard(
             lsh_candidate_pairs(minhash_signatures(probe_sets)), probe_sets
         ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        return memo_pin(
+        return (
             probe_pairs.filter(F.col("doc_b") == F.col("doc_a") + _OFF)
             .agg(F.count(F.lit(1)).alias("n_found"))
             .crossJoin(originals.agg(F.count(F.lit(1)).alias("n_pl")))
@@ -438,17 +431,14 @@ def _planted_recall(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
                     "planted_recall"
                 )
             )
-            # 1-row deterministic per (session, sf_dir, n): pinned so
-            # prepared re-executions broadcast the cached row instead of
-            # re-running the mini-corpus LSH pipeline every time (the probe
-            # showed up as +0.2s/run on the ngram bench entry).
         )
 
-    # one probe frame (and one probe_sets persist) per (session, sf_dir,
-    # n): repeated builds reuse it instead of stacking cache entries
-    # (r9 ADVICE #3)
+    # 1-row deterministic per (session, sf_dir, n): pinned so repeated
+    # builds and prepared re-executions broadcast the pinned row instead of
+    # re-running the mini-corpus LSH pipeline every time (the probe showed
+    # up as +0.2s/run on the ngram bench entry)
     key = (f"planted_recall_{n}", sf_dir, _parquet_fingerprint(sf_dir, "documents"))
-    return session_df_memo(spark, key, build)
+    return pin(spark, key, build)
 
 
 def _assert_probe_nonempty(spark: SparkSession, sf_dir: str) -> None:
@@ -514,15 +504,13 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + _OFF).alias("doc_id"),
         F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
     ).filter(F.col("doc_id") < _OFF + 20)
-    # one persisted corpus+probe fingerprint frame per (session, sf_dir):
+    # one pinned corpus+probe fingerprint frame per (session, sf_dir):
     # repeated builds previously stacked a fresh O(corpus) cache entry
-    # each (r9 ADVICE #3) — the memo reuses and fingerprint-invalidates
-    frame = session_df_memo(
+    # each (r9 ADVICE #3)
+    frame = pin(
         spark,
         ("simhash_frame", sf_dir, _parquet_fingerprint(sf_dir, "documents")),
-        lambda: memo_pin(
-            _simhash_frame(docs.select("doc_id", "text").unionByName(copies))
-        ),
+        lambda: _simhash_frame(docs.select("doc_id", "text").unionByName(copies)),
     )
     fps = frame.filter(F.col("doc_id") < _OFF)
     a = frame.filter(F.col("doc_id") < 20).select(
@@ -1021,20 +1009,18 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         shingle_sets = _shingle_sets_of(
-            docs.unionByName(copies), n=3
+            docs.unionByName(copies), n=3, fan_out=True
         ).persist()
         sigs = minhash_signatures(shingle_sets)
         cands = lsh_candidate_pairs(sigs)
-        return memo_pin(
-            exact_jaccard(cands, shingle_sets).filter(
-                F.col("jaccard") >= JACCARD_THRESHOLD
-            )
+        return exact_jaccard(cands, shingle_sets).filter(
+            F.col("jaccard") >= JACCARD_THRESHOLD
         )
 
-    # one persisted (shingle-set, verified-pair) pipeline per (session,
-    # sf_dir): repeated builds reuse instead of stacking entries (r9
-    # ADVICE #3 — the dedup_simhash leak, same class here)
-    all_pairs = session_df_memo(
+    # one pinned verified-pair frame per (session, sf_dir): repeated
+    # builds reuse instead of stacking entries (r9 ADVICE #3 — the
+    # dedup_simhash leak, same class here)
+    all_pairs = pin(
         spark,
         ("ngram_pairs", sf_dir, _parquet_fingerprint(sf_dir, "documents")),
         build,
@@ -1128,8 +1114,8 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same candidate pairs from ONE evaluation and ONE exchange: attach
     # the batch flag with a broadcast join, group by (band_id, band_hash),
     # collect the batch/corpus member lists per bucket, and explode their
-    # cross product. Same-session alternating A/B (scripts/
-    # ab_incremental_r12.py): 5.94 → 4.25 s min-of-4, output identical.
+    # cross product. Same-session alternating A/B (OPTIMIZATION_r12.md
+    # item 6): 5.94 → 4.25 s min-of-4, output identical.
     # Per-bucket state is bounded by bucket population — the same rows a
     # degenerate hot band would also concentrate into one join partition
     # in the old form, so the skew class is unchanged.

@@ -895,12 +895,14 @@ def ingest_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Runs over the SAME fixture whose strict load is pinned to FAIL in
     tests/test_ingest.py — the pair documents both contracts. Oracle:
     DuckDB TRY_CAST over the same csv; NULL-on-malformed semantics are
-    identical, so the whole routed frame hash-checks."""
+    identical, so the whole routed frame hash-checks. ``balance`` leaves
+    as DOUBLE, the nearest double of the exact decimal on both engines, so
+    toPandas() yields a float column, not Decimal objects."""
     src = read_any(spark, fixture_path("people_badtypes.csv"))
     bal = F.expr("try_cast(balance AS DECIMAL(12,2))")
     return src.select(
         "person_id",
         "full_name",
-        bal.alias("balance"),
+        bal.cast("double").alias("balance"),
         (bal.isNull() & F.col("balance").isNotNull()).alias("quarantined"),
     )

@@ -17,16 +17,16 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from omnidata_etl_spark.catalog import table
-from omnidata_etl_spark.queries._util import spread
+from omnidata_etl_spark.queries._util import pin, spread
 from omnidata_etl_spark.registry import query
-from omnidata_etl_spark.session import default_parallelism
+from omnidata_etl_spark.session import default_parallelism, state
 
 EMBED_DIM = 64
 LSH_PLANES = 8  # 2^8 = 256 buckets
 # Corpus size above which banded LSH hashing switches from the SQL
 # expression path to the Arrow/BLAS matmul path (see banded_lsh_buckets).
-# Pinned by the r10 crossover sweep (scripts/ab_lsh_crossover_r10.py —
-# full dedup_embedding_cosine, driver regime: fresh QueryExecution per
+# Pinned by the r10 crossover sweep (PLANS.md, round 10 — full
+# dedup_embedding_cosine, driver regime: fresh QueryExecution per
 # run, cold cache, min-of-N interleaved): SQL wins at 2k (1.17 vs 1.82 s
 # min), the two tie at 8k (2.89 vs 2.48 min / 3.32 vs 3.80 med), numpy
 # wins 1.5× at 32k (5.33 vs 3.46) and 3.2× at 128k (21.3 vs 6.6) — the
@@ -34,7 +34,7 @@ LSH_PLANES = 8  # 2^8 = 256 buckets
 # B·r·dim work dwarfs the Python-worker round-trip. The r9 gate move to
 # the 2k bench corpus was measured under a loaded local session and did
 # NOT transfer to the driver artifact (BENCH_r09 1.34→1.67 s regression,
-# root-caused r10); the driver-regime A/B (scripts/ab_embcos_r10.py)
+# root-caused r10); the driver-regime A/B (same PLANS.md section)
 # reads SQL min 1.17 / med 1.32 vs numpy min 1.82 / med 2.06 at 2k.
 NUMPY_LSH_MIN_N = 8_192
 
@@ -647,8 +647,8 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch, column-pruned to each branch's columns (see
     plans/r12/ann_ivf_pq_topk_after.txt). Forcing actual sharing was
     A/B'd twice and REJECTED: a persist (r11) and a single-pass
-    mapInArrow emitting the triple once (r12, scripts/ab_ann_r12.py)
-    both lose — the shared exchange serializes two cheap parallel
+    mapInArrow emitting the triple once (r12, OPTIMIZATION_r12.md item
+    4) both lose — the shared exchange serializes two cheap parallel
     subtrees. The probed-rows repartition is kept per branch: removing
     it measured -0.10 s (it fans the post-UDF rows out for the distance
     work and TakeOrdered). At 100 TB the same trade holds per branch:
@@ -724,8 +724,10 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pos = 1-based index of this row's cell in the probe list (NULL →
     # unprobed cell, filtered before any distance work — BOTH the ADC
     # lookups and the exact fold run only on probed rows). The 3-column
-    # scored frame is repartitioned so its exchange is shared by the two
-    # TakeOrdered consumers (single-encode form, docstring).
+    # scored frame is repartitioned to fan the post-UDF rows out for the
+    # distance work. The two TakeOrdered consumers do NOT share that
+    # exchange: the brute top-10 is a broadcast consumer, so the planner
+    # duplicates the subtree and each branch has its own (docstring).
     scored = (
         coded.withColumn(
             "pos", F.expr(f"array_position({probe_sql}, cc[0])")
@@ -841,7 +843,11 @@ def ann_ivf_served_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cell count in both forms — the extra session-default partitions
         # were always empty tasks paying schedule+commit overhead (r12
         # A/B: 1.39→1.05 and 0.98→0.75 s). A production index passes its
-        # nlist here for the same reason.
+        # nlist here for the same reason. Caveat: this is hash, not
+        # one-cell-per-partition, placement: pmod(murmur3(cid), 16) can
+        # send two cells to one partition and leave another empty, so
+        # write parallelism can fall below 16 and one task then writes
+        # both cells' files.
         .repartition(IVF_CLUSTERS, "cid")
         .write.mode("overwrite")
         .partitionBy("cid")
@@ -1077,16 +1083,13 @@ def _corpus_count(
     One parquet-metadata count job the FIRST time a query build needs the
     corpus size (the adaptive-LSH r pin), then a dict hit for every later
     build in the session — the r6 verdict flagged the per-build count on
-    the suite's slowest query. Keyed on the session object itself (the
+    the suite's slowest query. Kept in the session state (the
     catalog.table handle-cache discipline: the cache's lifetime IS the
-    session's, and sf_dir keys keep scale factors apart) PLUS a cheap
+    session's, and sf_dir keys keep scale factors apart), keyed on a cheap
     mtime/size fingerprint of the parquet path, so regenerating the data
     mid-session invalidates the count instead of silently pinning a stale
     adaptive-LSH r / recall denominator (r7 ADVICE)."""
-    cache = getattr(spark, "_omnidata_count_cache", None)
-    if cache is None:
-        cache = {}
-        spark._omnidata_count_cache = cache
+    cache = state(spark).counts
     key = (sf_dir, name, id_below, _parquet_fingerprint(sf_dir, name))
     n = cache.get(key)
     if n is None:
@@ -1179,17 +1182,13 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # r is pinned by the MAIN corpus size: the probe copies ride along at
-    # exactly the granularity deployed for this corpus. One persisted pair
+    # exactly the granularity deployed for this corpus. One pinned pair
     # frame (and one inner LSH persist) per (session, sf_dir): repeated
     # builds reuse instead of stacking cache entries (r9 ADVICE #3 class)
-    from omnidata_etl_spark.queries._util import memo_pin, session_df_memo
-
-    all_pairs = session_df_memo(
+    all_pairs = pin(
         spark,
         ("emb_cosine_pairs", sf_dir, _parquet_fingerprint(sf_dir, "embeddings")),
-        lambda: memo_pin(
-            blocked_cosine_pairs(corpus, 0.95, n_vectors=n_main)
-        ),
+        lambda: blocked_cosine_pairs(corpus, 0.95, n_vectors=n_main),
     )
     main = all_pairs.filter(
         (F.col("vec_a") < _POFF) & (F.col("vec_b") < _POFF)
@@ -1443,7 +1442,7 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduce, or a broken union all fail at least one leg."""
     import numpy as np
 
-    from omnidata_etl_spark.queries._util import local_df, session_df_memo
+    from omnidata_etl_spark.queries._util import local_df
 
     emb = table(spark, sf_dir, "embeddings").select("embedding")
 
@@ -1464,26 +1463,16 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted_rows = [((c * u).tolist(),) for _ in range(m_planted)]
     planted = local_df(spark, planted_rows, "embedding array<double>")
 
-    def build():
-        # localCheckpoint (eager), not persist: survives a long-lived
-        # session's clearCache() housekeeping between bench passes —
-        # see multimodal_audio_fingerprint's build note
-        df = (
+    data = pin(
+        spark,
+        ("power_iter_aug", sf_dir, _parquet_fingerprint(sf_dir, "embeddings")),
+        lambda: (
             emb.select(F.col("embedding").cast("array<double>"))
             .unionAll(planted)
             .coalesce(8)
-            .localCheckpoint(eager=True)
-        )
-        df._omnidata_checkpointed = True
-        df._omnidata_row_count = df.count()
-        return df
-
-    data = session_df_memo(
-        spark,
-        ("power_iter_aug", sf_dir, _parquet_fingerprint(sf_dir, "embeddings")),
-        build,
+        ),
     )
-    n_vec = getattr(data, "_omnidata_row_count", None) or data.count()
+    n_vec = _corpus_count(spark, sf_dir, "embeddings") + m_planted
 
     def gemv_pass(v: "np.ndarray") -> "np.ndarray":
         def op(batches):

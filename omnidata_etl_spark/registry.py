@@ -19,6 +19,8 @@ from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
+from omnidata_etl_spark.session import state
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 # Modules that register queries on import. Import order only decides the
@@ -233,10 +235,7 @@ def prepare(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     fn = all_specs()[name].fn
     if name in NO_PREPARE:
         return fn(spark, sf_dir)
-    cache = getattr(spark, "_omnidata_prepared", None)
-    if cache is None:
-        cache = {}
-        spark._omnidata_prepared = cache
+    cache = state(spark).prepared
     key = (name, sf_dir)
     df = cache.get(key)
     if df is None:

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
@@ -88,6 +89,33 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+@dataclass
+class SessionState:
+    """Everything the engine remembers per SparkSession, in one slot.
+
+    It lives on the session object, so it dies with the session (a
+    module-level WeakKeyDictionary cannot hold it: every cached DataFrame
+    strongly references its session, pinning the weak key forever).
+    """
+
+    tuned: bool = False  # ensure_tuned ran
+    sized_for: str | None = None  # sf_dir catalog shuffle sizing ran for
+    sized_partitions: str | None = None  # the values that sizing wrote
+    sized_advisory: str | None = None
+    tables: dict = field(default_factory=dict)  # (sf_dir, name) -> handle
+    counts: dict = field(default_factory=dict)  # similarity._corpus_count
+    prepared: dict = field(default_factory=dict)  # registry.prepare
+    pins: dict = field(default_factory=dict)  # queries._util.pin
+
+
+def state(spark: SparkSession) -> SessionState:
+    """The engine's per-session state (created on first use)."""
+    st = getattr(spark, "_omnidata_state", None)
+    if st is None:
+        st = spark._omnidata_state = SessionState()
+    return st
+
+
 def ensure_tuned(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine conf to an externally-created session.
 
@@ -102,9 +130,10 @@ def ensure_tuned(spark: SparkSession) -> SparkSession:
     engine unsets these keys mid-session (sink demos that toggle other conf
     restore them in finally blocks).
     """
-    if getattr(spark, "_omnidata_tuned", False):
+    st = state(spark)
+    if st.tuned:
         return spark
-    spark._omnidata_tuned = True
+    st.tuned = True
     for k, v in _RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)

@@ -296,9 +296,9 @@ def run(spark, sf_dir: str, name: str) -> float:
     fn = all_specs()[name].fn
     if CLEAR_CACHE:
         # bench.py housekeeping regime (r10 verdict #6): evict the SQL
-        # cache before the query so the memo_pin machinery (which lives
-        # OUTSIDE the cache manager) is what carries shared frames — a
-        # memo accidentally downgraded to plain persist would re-run its
+        # cache before the query so the pins (queries._util.pin, which
+        # live OUTSIDE the cache manager) are what carry shared frames — a
+        # pin accidentally downgraded to plain persist would re-run its
         # full build here and show up as a super-linear wall
         spark.catalog.clearCache()
     fn(spark, sf_dir).count()  # warm (plan + listing)

@@ -703,3 +703,36 @@ def test_two_pass_ranks_reuse_or_single_range_exchange(spark, sf_dir):
         f"curriculum: expected one materialized range exchange plus a "
         f"ReusedExchange, got {mat} materialized / {reused} reused"
     )
+
+
+def test_mirrored_events_not_spread(spark, sf_dir, tmp_path):
+    """spread() counts a catalog mirror as the row-group target written
+    into its file name, so an events builder over a mirrored events table
+    adds no round-robin exchange, while over the one-row-group original
+    it still fans the scan out."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from omnidata_etl_spark import catalog
+    from omnidata_etl_spark.session import default_parallelism
+
+    if os.environ.get("OMNIDATA_NO_MIRROR"):
+        pytest.skip("catalog mirror disabled")
+    src = pq.read_table(f"{sf_dir}/events.parquet")
+    rows = max(60_000, 8192 * default_parallelism())
+    big = pa.concat_tables([src] * -(-rows // src.num_rows))
+    pq.write_table(big, tmp_path / "events.parquet", row_group_size=len(big))
+    mirrored = str(tmp_path)
+    (scan,) = catalog.table(spark, mirrored, "events").inputFiles()
+    try:
+        assert catalog.scan_splits([scan]) >= default_parallelism(), scan
+        assert "RoundRobinPartitioning" not in _plan(
+            spark, mirrored, "fn_json_extract"
+        )
+    finally:
+        shutil.rmtree(os.path.dirname(scan.removeprefix("file:")))
+    assert "RoundRobinPartitioning" in _plan(spark, sf_dir, "fn_json_extract")
