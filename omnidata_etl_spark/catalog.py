@@ -12,9 +12,11 @@ import glob
 import hashlib
 import math
 import os
+import threading
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql.types import StructType
 
 from omnidata_etl_spark.session import default_parallelism, ensure_tuned, state
 
@@ -219,6 +221,106 @@ def _size_shuffle_partitions(spark: SparkSession, sf_dir: str) -> None:
         pass
 
 
+def fingerprint(path: str) -> tuple:
+    """Cheap version stamp of a file or directory: ``(mtime_ns, size,
+    ctime_ns, inode)`` of a file, the sorted ``(name, *stamp)`` of a
+    directory's files, ``()`` when the path cannot be stat()ed. stat()
+    calls only, no data read. ctime and inode catch what mtime and size
+    miss: a same-size rewrite whose mtime was set back (``cp -p``,
+    ``rsync -a``, ``os.utime``) still moves ctime, which no user tool can
+    set, and a file replaced by rename gets a new inode. Every memo that
+    must not outlive a regenerated input carries it: pins, corpus counts,
+    table handles and inferred schemas."""
+
+    def stamp(s: os.stat_result) -> tuple:
+        return (s.st_mtime_ns, s.st_size, s.st_ctime_ns, s.st_ino)
+
+    try:
+        if os.path.isdir(path):
+            parts = []
+            for root, _, files in os.walk(path):
+                for p in files:
+                    parts.append((p, *stamp(os.stat(os.path.join(root, p)))))
+            return tuple(sorted(parts))
+        return stamp(os.stat(path))
+    except OSError:
+        return ()
+
+
+def table_fingerprint(sf_dir: str, name: str) -> tuple:
+    """fingerprint() of a catalog table's source parquet."""
+    return fingerprint(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+# Spark's inferred schema per file version, for the whole process: like
+# Spark's own catalog it is shared by every session on the context.
+# (absolute path, format, options, session conf) -> (fingerprint,
+# StructType), in
+# least-recently-used order and capped at _MAX_SCHEMAS entries, so a
+# long-running driver that sees a new upload path per request holds at
+# most that many schemas. Each entry is tagged with the fingerprint taken
+# before its inference, so a lost race costs a repeat inference, never a
+# stale schema.
+_SCHEMAS: dict = {}
+_SCHEMAS_LOCK = threading.Lock()
+_MAX_SCHEMAS = 256
+# Session conf that changes what Spark infers for the same bytes; its
+# values are part of the memo key, so sessions that differ in any of them
+# never share a schema.
+_INFERENCE_CONF = (
+    "spark.sql.caseSensitive",
+    "spark.sql.timestampType",
+    "spark.sql.columnNameOfCorruptRecord",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def read_inferred(
+    spark: SparkSession,
+    reader: DataFrameReader,
+    fmt: str,
+    path: str,
+    options: tuple = (),
+) -> DataFrame:
+    """``reader.format(fmt).load(path)`` with Spark's inferred schema of
+    ``path``, inferred once per file version.
+
+    The first read of a file version is the inferring read itself (a CSV
+    header read, a JSON or XML scan, a parquet footer job: one Spark job
+    each), and its schema is memoized by (absolute path, ``fmt``,
+    ``options``, the reader options that change inference such as the CSV
+    separator, and ``spark``'s values of the _INFERENCE_CONF settings),
+    tagged with the path's fingerprint(). A read that finds the same
+    fingerprint passes the memo to ``.schema(...)``, so no inference job
+    fires. A rewritten file's entry is replaced at its next read. The memo
+    holds the _MAX_SCHEMAS (256) most recently read entries for the life
+    of the process; older ones, such as those of deleted uploads, are
+    dropped. A path that cannot be stat()ed (a glob, a remote URI) is
+    inferred on every read.
+    """
+    reader = reader.format(fmt)
+    conf = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONF)
+    key = (os.path.abspath(path), fmt, options, conf)
+    stamp = fingerprint(path)
+    with _SCHEMAS_LOCK:
+        hit = _SCHEMAS.pop(key, None)
+        if hit is not None:
+            _SCHEMAS[key] = hit  # re-insert: most recently used
+    if stamp and hit is not None and hit[0] == stamp:
+        return reader.schema(hit[1]).load(path)
+    df = reader.load(path)
+    if stamp:
+        with _SCHEMAS_LOCK:
+            _SCHEMAS.pop(key, None)
+            _SCHEMAS[key] = (stamp, df.schema)
+            while len(_SCHEMAS) > _MAX_SCHEMAS:
+                del _SCHEMAS[next(iter(_SCHEMAS))]
+    return df
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one catalog table; also ensures engine conf on the session.
 
@@ -235,13 +337,20 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_tuned(spark)
     _size_shuffle_partitions(spark, sf_dir)
     # DataFrame *handles* (logical plans, not data) live in the session
-    # state, so the cache's lifetime IS the session's.
+    # state, so the cache's lifetime IS the session's. The source's
+    # fingerprint is part of the key: a regenerated table gets a fresh
+    # handle (over a fresh listing) and its superseded one is dropped.
+    # Handles open through the process-wide schema memo, so a new
+    # session's first open of an unchanged table fires no job.
     handles = state(spark).tables
-    key = (sf_dir, name)
+    key = (sf_dir, name, table_fingerprint(sf_dir, name))
     cached = handles.get(key)
     if cached is not None:
         return cached
-    df = spark.read.parquet(_splittable_path(sf_dir, name))
+    for old in [k for k in handles if k[:2] == key[:2]]:
+        del handles[old]
+    path = _splittable_path(sf_dir, name)
+    df = read_inferred(spark, spark.read, "parquet", path)
     if name == "events":
         from pyspark.sql import functions as F
         from pyspark.sql import types as T

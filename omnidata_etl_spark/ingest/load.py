@@ -23,6 +23,7 @@ import uuid
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from omnidata_etl_spark.ingest.readers import empty_to_null
 from omnidata_etl_spark.ingest.types import map_user_type
 
 
@@ -33,20 +34,6 @@ class TableExistsError(RuntimeError):
 def sanitize_identifier(name: str) -> str:
     """Strip [^a-zA-Z0-9_] and lowercase (backend/index.js:146)."""
     return re.sub(r"[^a-zA-Z0-9_]", "", name or "").lower()
-
-
-def normalize_empty_to_null(df: DataFrame) -> DataFrame:
-    """Empty string → NULL on typed load (R10: the save path's behavior)."""
-    from pyspark.sql import types as T
-
-    return df.select(
-        *[
-            F.when(F.col(c) == "", None).otherwise(F.col(c)).alias(c)
-            if isinstance(field.dataType, T.StringType)
-            else F.col(c)
-            for c, field in zip(df.columns, df.schema.fields)
-        ]
-    )
 
 
 def has_id_column(df: DataFrame) -> bool:
@@ -61,43 +48,73 @@ def add_surrogate_key(
     """Inject a dense 1..N `id` iff no case-insensitive `id` exists (R12,
     reference `backend/index.js:174-182` — `id SERIAL` when absent).
 
-    Two-phase distributed row_number, NOT a global `Window.orderBy` (that
-    form moves every row to one partition — the single-node sort is the
-    100 TB anti-pattern WindowExec itself warns about):
+    `id` is the row's position in `ORDER BY order_by` (default: all
+    columns, stable for deduplicated loads), computed as a local row
+    number within sorted partitions, never a global `Window.orderBy`
+    (that form moves every row to one partition whatever the input size —
+    the single-node sort WindowExec itself warns about). Which path runs
+    is read off the input's physical plan, without a job:
 
-    1. range-partition on the ordering key (global order ACROSS partitions
-       is preserved; partition i's keys all sort before partition i+1's),
-    2. `row_number` within each partition (parallel local sorts),
-    3. add per-partition row-count offsets — one row per partition,
-       broadcast.
+    * The input already arrives in one partition (a plan with no
+      exchange over a file no bigger than one scan split, about 1 MB on a
+      multi-core host under the engine's 1 MB `openCostInBytes`): the
+      rows are sorted in that partition and `id` IS the local row number.
+      Nothing that ran in parallel before is serialized, and there is no
+      exchange, sample job, persist or offsets join.
+    * Any other input: range-partition on the ordering key into one
+      partition per core (partition i's keys all sort before partition
+      i+1's), sort each partition in parallel, and add per-partition
+      row-count offsets (one row per partition, broadcast). The ranged
+      frame is persisted for its two consumers; `load` unpersists it
+      after its write.
 
-    For a unique ordering key the result is identical to the global window
-    regardless of where the range boundaries fall (a row's number is its
-    position in the total order). Ties that straddle a boundary get an
+    For a unique ordering key both paths give every row its position in
+    the total order, so ids do not depend on the path. Ties get an
     arbitrary-but-dense assignment — the same nondeterminism any ORDER BY
-    with ties has. Defaults to ordering by all columns, stable for
-    deduplicated loads. `id` stays int for reference `SERIAL` parity; past
-    INT_MAX the projection raises an explicit error (never wraps) — a
-    >2.1B-row load opts into BIGSERIAL semantics (long ids) upstream.
-    `as_long=True` IS that BIGSERIAL opt-in: long ids, no INT_MAX guard
+    with ties has. `id` stays int for reference `SERIAL` parity; past
+    INT_MAX the projection raises an explicit error (never wraps).
+    `as_long=True` is the BIGSERIAL opt-in: long ids, no INT_MAX guard
     (for consumers whose row space legitimately exceeds 2.1B, e.g.
     etl_global_shuffle positions at corpus scale).
     """
     return _keyed(df, order_by, as_long)[0]
 
 
+def _input_partitions(df: DataFrame) -> int:
+    """Partitions ``df``'s physical plan yields, read off its RDD without
+    running a job; 0 when the plan holds an exchange (adaptive or not),
+    whose partition count is only known once its stages run."""
+    plan = df._jdf.queryExecution().executedPlan()
+    nodes = [plan]
+    while nodes:
+        node = nodes.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan" or "Exchange" in name:
+            return 0
+        kids = node.children()
+        nodes.extend(kids.apply(i) for i in range(kids.size()))
+    return plan.execute().getNumPartitions()
+
+
 def _keyed(
     df: DataFrame, order_by: list[str] | None, as_long: bool
 ) -> tuple[DataFrame, DataFrame | None]:
     """(add_surrogate_key's result, its scratch frame): the persisted ranged
-    frame both id branches read, returned so load() can unpersist it once
-    its write has run. The scratch is None when ``df`` already has an id."""
+    frame both id branches read on the range-partitioned path, returned so
+    load() can unpersist it once its write has run. The scratch is None
+    when ``df`` already has an id or arrives in one partition."""
     if has_id_column(df):
         return df, None
-    order_cols = order_by or df.columns
-    ocols = [F.col(c) for c in order_cols]
-    from omnidata_etl_spark.session import default_parallelism
+    ocols = [F.col(c) for c in order_by or df.columns]
+    single = _input_partitions(df) == 1
+    if single:
+        # no exchange; the coalesce is free here and keeps the ids right
+        # should the scan re-plan into more splits when it executes
+        ranged = df.coalesce(1)
+    else:
+        from omnidata_etl_spark.session import default_parallelism
 
+        ranged = df.repartitionByRange(default_parallelism(), *ocols)
     # Local row number WITHOUT a Window: a Window.partitionBy(pid) would
     # demand hashpartitioning(pid) — a second full-data shuffle Catalyst
     # can't elide even though each partition already holds exactly one pid.
@@ -106,63 +123,61 @@ def _keyed(
     # number within the partition in the low 33 bits; masked, it IS the
     # local row number over the sorted stream (the id is nondeterministic-
     # tagged, so Catalyst never reorders it across the sort below it).
-    numbered = (
-        df.repartitionByRange(default_parallelism(), *ocols)
-        .sortWithinPartitions(*ocols)
-        .withColumn("_sk_pid", F.spark_partition_id())
-        .withColumn(
-            "_sk_rn",
-            F.monotonically_increasing_id().bitwiseAND(
-                F.lit((1 << 33) - 1)
-            )
-            + 1,
-        )
-        .persist()  # two consumers below; ReusedExchange cannot dedupe a
-        # broadcast-side subtree, so without the cache the offsets branch
-        # would re-run the range shuffle. load() unpersists after its sink
-        # write; other callers inherit the session-scoped cache lifetime.
+    numbered = ranged.sortWithinPartitions(*ocols).withColumn(
+        "_sk_rn",
+        F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)) + 1,
     )
-    # Per-partition offsets: #partitions rows — the single-partition
-    # prefix-sum window over them is trivial at any scale (partition
-    # count, not row count).
-    offsets = (
-        numbered.groupBy("_sk_pid")
-        .agg(F.count(F.lit(1)).alias("_sk_n"))
-        .withColumn(
-            "_sk_off",
-            F.coalesce(
-                F.sum("_sk_n").over(
-                    Window.orderBy("_sk_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
+    scratch = None
+    if single:
+        pos = F.col("_sk_rn")
+    else:
+        # Two consumers below; ReusedExchange cannot dedupe a broadcast-side
+        # subtree, so without the cache the offsets branch would re-run the
+        # range shuffle. load() unpersists after its sink write; other
+        # callers inherit the session-scoped cache lifetime.
+        numbered = numbered.withColumn("_sk_pid", F.spark_partition_id())
+        scratch = numbered = numbered.persist()
+        # Per-partition offsets: one row per partition — the single-
+        # partition prefix-sum window over them is trivial at any scale.
+        offsets = (
+            numbered.groupBy("_sk_pid")
+            .agg(F.count(F.lit(1)).alias("_sk_n"))
+            .withColumn(
+                "_sk_off",
+                F.coalesce(
+                    F.sum("_sk_n").over(
+                        Window.orderBy("_sk_pid").rowsBetween(
+                            Window.unboundedPreceding, -1
+                        )
+                    ),
+                    F.lit(0).cast("long"),
                 ),
-                F.lit(0).cast("long"),
-            ),
+            )
+            .select("_sk_pid", "_sk_off")
         )
-        .select("_sk_pid", "_sk_off")
-    )
+        numbered = numbered.join(F.broadcast(offsets), "_sk_pid")
+        pos = F.col("_sk_rn") + F.col("_sk_off")
+    # id arithmetic stays in LONG; the default int cast is guarded with an
+    # explicit, actionable error: a >2^31-row load must not wrap (or die in
+    # an opaque ANSI overflow) — SERIAL parity caps at INT_MAX by design,
+    # and bigger loads opt into BIGSERIAL via as_long (r5 ADVICE on the
+    # silent-wrap hazard).
     id_expr = (
-        (F.col("_sk_rn") + F.col("_sk_off")).alias("id")
+        pos
         if as_long
-        else F.expr(
-            "CASE WHEN _sk_rn + _sk_off > 2147483647 THEN "
-            "raise_error('surrogate_key: row number exceeds INT_MAX "
-            "(SERIAL parity); use BIGSERIAL semantics upstream for "
-            ">2.1B-row loads') "
-            "ELSE cast(_sk_rn + _sk_off AS INT) END"
-        ).alias("id")
+        else F.when(
+            pos > 2147483647,
+            F.raise_error(
+                F.lit(
+                    "surrogate_key: row number exceeds INT_MAX (SERIAL "
+                    "parity); use BIGSERIAL semantics upstream for "
+                    ">2.1B-row loads"
+                )
+            ),
+        ).otherwise(pos.cast("int"))
     )
-    out = (
-        numbered.join(F.broadcast(offsets), "_sk_pid")
-        # id arithmetic stays in LONG; the default int cast is guarded with
-        # an explicit, actionable error: a >2^31-row load must not wrap (or
-        # die in an opaque ANSI overflow) — SERIAL parity caps at INT_MAX
-        # by design, and bigger loads opt into BIGSERIAL via as_long
-        # (r5 ADVICE on the silent-wrap hazard).
-        .withColumn("id", id_expr)
-        .drop("_sk_pid", "_sk_rn", "_sk_off")
-    )
-    return out, numbered
+    out = numbered.withColumn("id", id_expr).drop("_sk_pid", "_sk_rn", "_sk_off")
+    return out, scratch
 
 
 def apply_types(df: DataFrame, types: dict[str, str] | None) -> DataFrame:
@@ -203,7 +218,7 @@ def load(
         raise TableExistsError(f"table {name!r} already exists")
 
     out = df.select(*columns) if columns else df
-    out = normalize_empty_to_null(out)
+    out = empty_to_null(out)
     out = apply_types(out, types)
     scratch = None
     if surrogate_key:

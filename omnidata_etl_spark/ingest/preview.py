@@ -3,7 +3,10 @@
 Reference: 10-row preview with limit pushed into every source (Excel
 `sheetRows:10` backend/index.js:96, text stop-after-11-lines :102-103,
 Access `SELECT TOP 10` :72,:92). Spark's CollectLimit + source limit
-pushdown give the same never-parse-the-whole-file behavior declaratively.
+pushdown give the same stop-early read declaratively, once the schema is
+known: the first read of a JSON or XML file version scans it whole to
+infer the schema, and every later read reuses the memoized schema
+(readers.py), so a preview is then one limit job.
 """
 
 from __future__ import annotations

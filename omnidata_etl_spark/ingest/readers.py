@@ -14,8 +14,17 @@ Reference behavior re-expressed declaratively (SURVEY.md §2A R1-R3, R8, R10):
     (backend/index.js:258).
 
 Everything is a declarative `spark.read` so limit/column pruning push into
-the scan (preview never parses the whole file — Catalyst's CollectLimit is
-the reference's stop-after-11-lines, SURVEY.md §4).
+the scan: preview's CollectLimit is the reference's stop-after-11-lines
+(SURVEY.md §4) once the schema is known. Finding the schema is Spark's one
+inference job per reader: the CSV header line, a full scan of a JSON or
+XML file, a parquet footer job. Its result is memoized for the whole
+process by `catalog.read_inferred`, keyed by the file's absolute path,
+its fingerprint (mtime, size, ctime, inode), the inference options (the
+CSV separator, the XML row tag) and the session's inference conf, and
+held until the file changes, 256 more recently read files push it out,
+or the process ends. So only the first read of a file version pays
+inference; later reads pass `.schema(...)` and fire no job until an
+action.
 """
 
 from __future__ import annotations
@@ -26,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from omnidata_etl_spark.catalog import read_inferred
 from omnidata_etl_spark.session import ensure_tuned
 
 
@@ -65,8 +75,10 @@ def _first_line(path: str) -> str:
     return ""
 
 
-def _empty_to_null(df: DataFrame) -> DataFrame:
-    """Empty-string → NULL normalization (R10)."""
+def empty_to_null(df: DataFrame) -> DataFrame:
+    """Empty string → NULL in every string column (R10: the save path's
+    behavior). The readers apply it, and so does `load`, which accepts
+    any DataFrame."""
     return df.select(
         *[
             F.when(F.col(c) == "", None).otherwise(F.col(c)).alias(c)
@@ -84,16 +96,15 @@ def read_delimited(
     all-text columns, trimmed cells, empty → NULL."""
     ensure_tuned(spark)
     sep = sep or sniff_delimiter(_first_line(path))
-    df = (
+    reader = (
         spark.read.option("header", True)
         .option("sep", sep)
         .option("inferSchema", False)  # text-by-default (R7: user types later)
         .option("ignoreLeadingWhiteSpace", True)
         .option("ignoreTrailingWhiteSpace", True)
         .option("mode", "PERMISSIVE")  # short rows → nulls, like the save path
-        .csv(path)
     )
-    return _empty_to_null(df)
+    return empty_to_null(read_inferred(spark, reader, "csv", path, (sep,)))
 
 
 def read_markdown(spark: SparkSession, path: str) -> DataFrame:
@@ -117,13 +128,13 @@ def read_markdown(spark: SparkSession, path: str) -> DataFrame:
         F.trim(F.element_at(parts, i + 1)).alias(h)
         for i, h in enumerate(headers)
     ]
-    return _empty_to_null(body.select(*cols))
+    return empty_to_null(body.select(*cols))
 
 
 def read_json(spark: SparkSession, path: str) -> DataFrame:
     """Line-delimited JSON scan; nested objects stringified (R11 parity)."""
     ensure_tuned(spark)
-    df = spark.read.json(path)
+    df = read_inferred(spark, spark.read, "json", path)
     out = []
     for field in df.schema.fields:
         if isinstance(field.dataType, (T.StructType, T.MapType)):
@@ -140,11 +151,8 @@ def read_xml(spark: SparkSession, path: str, row_tag: str = "row") -> DataFrame:
     nested elements are stringified exactly like JSON objects (R11 parity)
     so downstream typing stays user-directed text-first."""
     ensure_tuned(spark)
-    df = (
-        spark.read.format("xml")
-        .option("rowTag", row_tag)
-        .load(path)
-    )
+    reader = spark.read.option("rowTag", row_tag)
+    df = read_inferred(spark, reader, "xml", path, (row_tag,))
     out = []
     for field in df.schema.fields:
         if isinstance(field.dataType, (T.StructType, T.MapType, T.ArrayType)):
@@ -165,7 +173,7 @@ def _rows_to_df(spark: SparkSession, rows: list) -> DataFrame:
     )
     body = [tuple(r[: len(headers)]) + (None,) * (len(headers) - len(r))
             for r in rows[1:]]
-    return _empty_to_null(spark.createDataFrame(body, schema))
+    return empty_to_null(spark.createDataFrame(body, schema))
 
 
 def read_excel(spark: SparkSession, path: str) -> DataFrame:
@@ -244,7 +252,7 @@ def read_any(spark: SparkSession, path: str, fmt: str | None = None) -> DataFram
         ext = os.path.splitext(strip_codec_suffix(path))[1].lower()
     if ext == ".parquet":
         ensure_tuned(spark)
-        return spark.read.parquet(path)
+        return read_inferred(spark, spark.read, "parquet", path)
     reader = _EXT_READERS.get(ext, read_delimited)
     return reader(spark, path)
 

@@ -188,7 +188,7 @@ def pin(spark, key: tuple, build) -> DataFrame:
     Materializes ``build()`` once per (session, key), at the first build,
     and hands every later build the same frame, so repeat builds fire no
     Spark job. ``key = (kind, sf_dir, fingerprint, ...)``: the fingerprint
-    (similarity._parquet_fingerprint) changes when a source table is
+    (catalog.table_fingerprint) changes when a source table is
     regenerated, and the pin of the same (kind, sf_dir) it supersedes is
     released, its blocks freed.
 

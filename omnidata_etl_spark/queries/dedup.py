@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from omnidata_etl_spark.catalog import table
+from omnidata_etl_spark.catalog import table, table_fingerprint
 from omnidata_etl_spark.queries._util import pin
 from omnidata_etl_spark.registry import query
 
@@ -311,8 +311,6 @@ def _main_pairs_n5(spark: SparkSession, sf_dir: str) -> DataFrame:
     every pass re-ran shingling+LSH+verification per query (r10:
     near_minhash benched 1.27 s with the whole family rebuilding; pinned,
     the family shares ONE materialization per corpus generation)."""
-    from omnidata_etl_spark.queries.similarity import _parquet_fingerprint
-
     def build() -> DataFrame:
         shingle_sets = _shingle_sets(spark, sf_dir, n=5).persist()
         sigs = minhash_signatures(shingle_sets)
@@ -323,7 +321,7 @@ def _main_pairs_n5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return pin(
         spark,
-        ("main_pairs_n5", sf_dir, _parquet_fingerprint(sf_dir, "documents")),
+        ("main_pairs_n5", sf_dir, table_fingerprint(sf_dir, "documents")),
         build,
     )
 
@@ -412,8 +410,6 @@ def _planted_recall(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     pipeline's shingle-set plan byte-identical across the dedup family —
     they share one cached intermediate in a warm session (planting into
     the corpus forked the plan and cost ~2s/run at sf0.1)."""
-    from omnidata_etl_spark.queries.similarity import _parquet_fingerprint
-
     _assert_probe_nonempty(spark, sf_dir)
 
     def build() -> DataFrame:
@@ -437,7 +433,7 @@ def _planted_recall(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     # builds and prepared re-executions broadcast the pinned row instead of
     # re-running the mini-corpus LSH pipeline every time (the probe showed
     # up as +0.2s/run on the ngram bench entry)
-    key = (f"planted_recall_{n}", sf_dir, _parquet_fingerprint(sf_dir, "documents"))
+    key = (f"planted_recall_{n}", sf_dir, table_fingerprint(sf_dir, "documents"))
     return pin(spark, key, build)
 
 
@@ -496,8 +492,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumes a cached _simhash_frame(docs) plan. The unioned frame is
     # persisted — 16 bytes/row — for its three consumers (output, probe
     # a-side, probe b-side).
-    from omnidata_etl_spark.queries.similarity import _parquet_fingerprint
-
     _assert_probe_nonempty(spark, sf_dir)
     _OFF = 10_000_000_000  # sentinel id offset, far above any real doc_id
     copies = docs.select(
@@ -509,7 +503,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each (r9 ADVICE #3)
     frame = pin(
         spark,
-        ("simhash_frame", sf_dir, _parquet_fingerprint(sf_dir, "documents")),
+        ("simhash_frame", sf_dir, table_fingerprint(sf_dir, "documents")),
         lambda: _simhash_frame(docs.select("doc_id", "text").unionByName(copies)),
     )
     fps = frame.filter(F.col("doc_id") < _OFF)
@@ -1005,7 +999,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + _OFF).alias("doc_id"),
         F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
     )
-    from omnidata_etl_spark.queries.similarity import _parquet_fingerprint
 
     def build() -> DataFrame:
         shingle_sets = _shingle_sets_of(
@@ -1022,7 +1015,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup_simhash leak, same class here)
     all_pairs = pin(
         spark,
-        ("ngram_pairs", sf_dir, _parquet_fingerprint(sf_dir, "documents")),
+        ("ngram_pairs", sf_dir, table_fingerprint(sf_dir, "documents")),
         build,
     )
     main = all_pairs.filter(

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from omnidata_etl_spark.catalog import table
+from omnidata_etl_spark.catalog import table, table_fingerprint
 from omnidata_etl_spark.queries._util import pin, spread
 from omnidata_etl_spark.session import ensure_tuned
 
@@ -966,14 +966,12 @@ def multimodal_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 names=["doc_id", "variant", "phash"],
             )
 
-    from omnidata_etl_spark.queries.similarity import _parquet_fingerprint
-
     # two independent consumers below (hash-bucket stats + per-doc twin
     # pivot) would each re-run the decode pass; pin the tiny post-decode
     # frame (3 scalars per asset) so pixels are decoded exactly once
     hashed = pin(
         spark,
-        ("image_phash", sf_dir, _parquet_fingerprint(sf_dir, "documents")),
+        ("image_phash", sf_dir, table_fingerprint(sf_dir, "documents")),
         lambda: spread(
             table(spark, sf_dir, "documents").select("doc_id", "text")
         ).mapInArrow(op, schema="doc_id long, variant string, phash long"),
@@ -1100,15 +1098,13 @@ def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 names=["doc_id", "variant", "landmark"],
             )
 
-    from omnidata_etl_spark.queries.similarity import _parquet_fingerprint
-
     # one pinned landmark frame per corpus generation (r9 ADVICE #3
     # discipline): repeated builds reuse it, and all four summaries below
     # are subtrees of ONE action over it (a fresh count-per-summary paid
     # ~0.25 s of local job floor each — 1.49 s → this form)
     lm = pin(
         spark,
-        ("audio_lm", sf_dir, _parquet_fingerprint(sf_dir, "documents")),
+        ("audio_lm", sf_dir, table_fingerprint(sf_dir, "documents")),
         lambda: spread(
             table(spark, sf_dir, "documents").select("doc_id", "text")
         ).mapInArrow(op, schema="doc_id long, variant string, landmark long"),

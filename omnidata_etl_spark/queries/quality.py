@@ -730,20 +730,24 @@ def etl_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The 100 TB shape: shuffling by sorting on a seeded hash, NOT by
     collecting or sampling — `md5(seed || doc_id)` is the permutation,
-    and the global position comes from ingest.load's two-phase
-    distributed row_number (range-partition on the hash → parallel local
-    sorts → broadcast per-partition offsets; load.py:add_surrogate_key),
-    never a single-partition global Window. `as_long=True` is the
-    BIGSERIAL opt-in — corpus row counts exceed INT_MAX. doc_id is the
-    tiebreak so the permutation is total and the oracle differential is
-    exact (md5 hex parity between Spark and DuckDB is itself part of the
-    check).
+    and the global position comes from ingest.load's distributed
+    row_number (load.py:add_surrogate_key), never a global Window. A
+    corpus that scans as more than one partition (any real corpus) is
+    range-partitioned on the hash into one partition per core, sorted
+    locally in parallel, and offset by broadcast per-partition counts; a
+    corpus that scans as one partition (documents at every local scale
+    factor) is sorted in that partition, where the local row number is
+    the position. `as_long=True` is the BIGSERIAL opt-in — corpus row
+    counts exceed INT_MAX. doc_id is the tiebreak so the permutation is
+    total and the oracle differential is exact (md5 hex parity between
+    Spark and DuckDB is itself part of the check).
 
-    Not pinned: the range shuffle IS the query's work, and no other
-    query shares the result, so a build stays lazy (no job) and every
-    execution pays the shuffle. add_surrogate_key persists its ranged
-    frame for the two-consumer plan; a repeat build's identical plan is a
-    cache-manager hit, so repeated builds do not accrete cache entries."""
+    Not pinned: the sort IS the query's work, and no other query shares
+    the result, so a build stays lazy (no job) and every execution pays
+    the sort. On the range-partitioned path add_surrogate_key persists
+    its ranged frame for the two-consumer plan; a repeat build's
+    identical plan is a cache-manager hit, so repeated builds do not
+    accrete cache entries."""
     from omnidata_etl_spark.ingest.load import add_surrogate_key
 
     docs = table(spark, sf_dir, "documents").select("doc_id")

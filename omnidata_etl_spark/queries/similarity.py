@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from omnidata_etl_spark.catalog import table
+from omnidata_etl_spark.catalog import table, table_fingerprint
 from omnidata_etl_spark.queries._util import pin, spread
 from omnidata_etl_spark.registry import query
 from omnidata_etl_spark.session import default_parallelism, state
@@ -1042,29 +1042,6 @@ def blocked_cosine_pairs(
     )
 
 
-def _parquet_fingerprint(sf_dir: str, name: str) -> tuple:
-    """Cheap (mtime_ns, size) fingerprint of a catalog parquet path —
-    one or a handful of stat() calls, no data read. Folded into the
-    _corpus_count cache key so a regenerated table invalidates the
-    memoized count instead of silently pinning stale values (r7 ADVICE —
-    the same staleness class the r7 TF-IDF change removed)."""
-    import os
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isdir(path):
-            parts = []
-            for root, _, files in os.walk(path):
-                for p in files:
-                    s = os.stat(os.path.join(root, p))
-                    parts.append((p, s.st_mtime_ns, s.st_size))
-            return tuple(sorted(parts))
-        s = os.stat(path)
-        return (s.st_mtime_ns, s.st_size)
-    except OSError:
-        return ()
-
-
 def _corpus_count(
     spark: SparkSession,
     sf_dir: str,
@@ -1090,7 +1067,7 @@ def _corpus_count(
     mid-session invalidates the count instead of silently pinning a stale
     adaptive-LSH r / recall denominator (r7 ADVICE)."""
     cache = state(spark).counts
-    key = (sf_dir, name, id_below, _parquet_fingerprint(sf_dir, name))
+    key = (sf_dir, name, id_below, table_fingerprint(sf_dir, name))
     n = cache.get(key)
     if n is None:
         # drop superseded fingerprints for the same (sf_dir, table, filter)
@@ -1187,7 +1164,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # builds reuse instead of stacking cache entries (r9 ADVICE #3 class)
     all_pairs = pin(
         spark,
-        ("emb_cosine_pairs", sf_dir, _parquet_fingerprint(sf_dir, "embeddings")),
+        ("emb_cosine_pairs", sf_dir, table_fingerprint(sf_dir, "embeddings")),
         lambda: blocked_cosine_pairs(corpus, 0.95, n_vectors=n_main),
     )
     main = all_pairs.filter(
@@ -1465,7 +1442,7 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     data = pin(
         spark,
-        ("power_iter_aug", sf_dir, _parquet_fingerprint(sf_dir, "embeddings")),
+        ("power_iter_aug", sf_dir, table_fingerprint(sf_dir, "embeddings")),
         lambda: (
             emb.select(F.col("embedding").cast("array<double>"))
             .unionAll(planted)

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from omnidata_etl_spark.catalog import table
+from omnidata_etl_spark.catalog import table, table_fingerprint
 from omnidata_etl_spark.queries._util import pin, spread
 from omnidata_etl_spark.registry import query
 
@@ -848,8 +848,6 @@ def _doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted pairs instead of re-running the tokenize/explode prefix.
     `source` rides along (functionally dependent on doc_id) for the
     perplexity consumer; tfidf simply ignores it — counts are identical."""
-    from omnidata_etl_spark.queries.similarity import _parquet_fingerprint
-
     def build():
         docs = table(spark, sf_dir, "documents")
         return (
@@ -865,7 +863,7 @@ def _doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return pin(
         spark,
-        ("doc_tok_counts", sf_dir, _parquet_fingerprint(sf_dir, "documents")),
+        ("doc_tok_counts", sf_dir, table_fingerprint(sf_dir, "documents")),
         build,
     )
 

@@ -102,7 +102,7 @@ class SessionState:
     sized_for: str | None = None  # sf_dir catalog shuffle sizing ran for
     sized_partitions: str | None = None  # the values that sizing wrote
     sized_advisory: str | None = None
-    tables: dict = field(default_factory=dict)  # (sf_dir, name) -> handle
+    tables: dict = field(default_factory=dict)  # (sf_dir, name, fp) -> handle
     counts: dict = field(default_factory=dict)  # similarity._corpus_count
     prepared: dict = field(default_factory=dict)  # registry.prepare
     pins: dict = field(default_factory=dict)  # queries._util.pin

@@ -47,7 +47,23 @@ def _build_jobs(spark, name: str, sf_dir: str) -> int:
 
 
 def _persistent(spark) -> int:
-    return len(spark.sparkContext._jsc.getPersistentRDDs())
+    """Persisted RDDs on the context, counted once unreferenced ones are
+    gone. Spark's ContextCleaner unpersists an RDD that nothing references
+    only after a JVM GC, at a time no test controls, so garbage left by
+    earlier tests could otherwise leave the count between two reads. A
+    Python and a JVM collection, then equal reads 0.3 s apart, settle it."""
+    import gc
+
+    gc.collect()
+    spark._jvm.System.gc()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    count = len(rdds())
+    for _ in range(20):
+        time.sleep(0.3)
+        count, last = len(rdds()), count
+        if count == last:
+            break
+    return count
 
 
 def _sorted(pdf):
@@ -115,3 +131,40 @@ def test_regenerated_source_frees_superseded_pins(spark, sf_dir, tmp_path):
         want = _sorted(all_specs()[n].fn(fresh, copy).toPandas())
         assert _sorted(first[n]).equals(want), n
         assert _sorted(again[n]).equals(want), n
+
+
+def test_regenerated_table_gets_fresh_handle(spark, sf_dir, tmp_path):
+    """Table handles are keyed by the source's fingerprint: an unchanged
+    table reopens to the same handle, and in a new session with no
+    inference job; a table rewritten with a new size gets a new handle
+    whose rows equal a fresh session's."""
+    import pyarrow.parquet as pq
+
+    copy = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, copy)
+    first = catalog.table(spark, copy, "nation")
+    assert catalog.table(spark, copy, "nation") is first
+    for name in catalog.TABLES:
+        catalog.table(spark, copy, name)
+    fresh = spark.newSession()
+    sc = spark.sparkContext
+    group = f"pin-test-reopen-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        for name in catalog.TABLES:
+            catalog.table(fresh, copy, name)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+    path = os.path.join(copy, "nation.parquet")
+    size = os.path.getsize(path)
+    pq.write_table(pq.read_table(path).slice(0, 20), path)
+    assert os.path.getsize(path) != size
+    again = catalog.table(spark, copy, "nation")
+    assert again is not first
+    got = _sorted(again.toPandas())
+    assert len(got) == 20
+    want = catalog.table(spark.newSession(), copy, "nation").toPandas()
+    assert got.equals(_sorted(want))

@@ -284,14 +284,27 @@ def test_etl_global_shuffle_is_dense_permutation(spark, sf_dir):
 
 def test_etl_global_shuffle_plan_scale_shape(spark, sf_dir):
     """The global position comes from the two-phase range-partitioned
-    row_number: the plan must carry a RANGE partitioning exchange, and the
-    only Window sits over the per-partition offsets frame (partition-count
-    rows), never over the full corpus (the single-partition global-sort
-    anti-pattern)."""
+    row_number: once the corpus scans as more than one partition the plan
+    must carry a RANGE partitioning exchange, and the only Window sits
+    over the per-partition offsets frame (partition-count rows), never
+    over the full corpus (the single-partition global-sort anti-pattern).
+    At sf0.001 the corpus scans as one partition, so the sort runs there
+    with no persisted frame and no broadcast offsets join."""
     from omnidata_etl_spark.registry import all_specs
 
-    df = all_specs()["etl_global_shuffle"].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    fn = all_specs()["etl_global_shuffle"].fn
+    small = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" not in small
+    assert "BroadcastExchange" not in small
+    # a test-local split size makes the scan yield several partitions
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        df = fn(spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
     assert "rangepartitioning" in plan.lower()
     # the Window's child aggregates to one row per partition id
     assert "_sk_pid" in plan
